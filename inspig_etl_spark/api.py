@@ -6,9 +6,10 @@ Route-for-route with the reference:
 
 - ``GET /health`` → status/timestamp/version;
 - ``POST /api/etl/run-farm`` with ``{"farmNo": N, "dayGb": "WEEK",
-  "insDate": "YYYYMMDD"}`` → runs the single-farm weekly report, lands the
-  wide rows + summary through the S12 replace-by-slice sinks, and answers
-  the camelCase ``RunFarmResponse`` contract (``server.py:91-106``):
+  "insDate": "YYYYMMDD"}`` → runs the single-farm weekly report, lands it
+  into the report tables the weekly batch and ``runner --manual`` also
+  write (:func:`pipelines.on_demand.run_and_land_farm`), and answers the
+  camelCase ``RunFarmResponse`` contract (``server.py:91-106``):
   status/farmNo/dayGb/masterSeq/shareToken/year/weekNo/insDate/dtFrom/dtTo,
   with validation errors as HTTP 400 (farmNo ≥ 1, insDate 8 digits, dayGb
   enum) and engine errors (unknown farm, MONTH/QUARTER unimplemented) as
@@ -16,7 +17,9 @@ Route-for-route with the reference:
 - ``GET /api/etl/status/{farm_no}?day_gb=WEEK`` → latest COMPLETE report
   row for the farm from the landed summary table (the reference's
   TS_INS_WEEK ⋈ TS_INS_MASTER lookup, ``server.py:238-268``), answering
-  exists/shareToken/year/weekNo/dtFrom/dtTo/statusCd.
+  exists/shareToken/year/weekNo/dtFrom/dtTo/statusCd, whichever of the
+  three writers landed the week. An engine error on either route is
+  HTTP 500 ``{"error": ...}``.
 
 The web framework (FastAPI/pydantic/uvicorn) is deliberately NOT a
 dependency — the engine owns the compute and the storage contract; any
@@ -39,18 +42,10 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 VERSION = "1.0"
-SUMMARY_SCHEMA_EXTRA = (
-    "master_seq BIGINT, report_year INT, week_no INT, dt_from STRING, "
-    "dt_to STRING, status_cd STRING, share_token STRING"
-)
-
-
-def _master_seq(period: dict) -> int:
-    return period["year"] * 100 + period["week_no"]
 
 
 # Serializes every access to the landed ts_ins_week(_sub) tables: run-farm
-# is a read-modify-write (read_or_empty → replace_by_key → staged swap), so
+# is a read-modify-write (sinks.land_slice: read → replace → staged swap), so
 # two concurrent requests would each merge against the same prior state and
 # the last swap would silently drop the other's rows; the status read also
 # must not race the swap's brief rename window. One process-wide lock is
@@ -64,10 +59,7 @@ def handle_run_farm(spark: SparkSession, sf_dir: str, output: str, body: dict) -
     """POST /api/etl/run-farm — validate, run, land, answer.
 
     Returns (http_status, response_body)."""
-    import os
-
-    from inspig_etl_spark.pipelines.on_demand import run_single_farm
-    from inspig_etl_spark.sources.sinks import read_or_empty, replace_by_key, staged_overwrite
+    from inspig_etl_spark.pipelines.on_demand import run_and_land_farm
 
     farm_no = body.get("farmNo")
     day_gb = body.get("dayGb", "WEEK")
@@ -87,67 +79,21 @@ def handle_run_farm(spark: SparkSession, sf_dir: str, output: str, body: dict) -
         ins_date = datetime.now().strftime("%Y%m%d")
 
     with _STATE_LOCK:
-        result = run_single_farm(spark, sf_dir, farm_no=farm_no, ins_date=ins_date, day_gb=day_gb)
-        if result["status"] != "success":
-            return 200, {
-                "status": "error",
-                "farmNo": farm_no,
-                "dayGb": day_gb,
-                "error": result.get("error"),
-                "message": result.get("message"),
-            }
-
-        # run_single_farm derives master_seq from the period (year*100+week)
-        # and stamps it into the wide rows, so the S12 replace key below
-        # scopes to THIS week's slice — the engine and the landed tables
-        # agree on the sequence by construction.
-        seq = result["master_seq"]
-        if seq != _master_seq(result):
-            # Explicit check (not assert: stripped under `python -O`, and a
-            # mismatch must surface as the endpoint's error contract, not an
-            # unhandled 500) — a drifted seq would land this week's rows
-            # under the wrong replace key and orphan the real slice.
-            return 200, {
-                "status": "error",
-                "farmNo": farm_no,
-                "dayGb": day_gb,
-                "error": "master_seq mismatch",
-                "message": (
-                    f"engine stamped master_seq={seq} but the period derives "
-                    f"{_master_seq(result)} — refusing to land inconsistent rows"
-                ),
-            }
-        # Land through the S12 slice semantics: this (master, farm) replaces
-        # its own prior rows, other farms/weeks stay (TS_INS_WEEK_SUB /
-        # TS_INS_WEEK).
-        wide = result["wide_rows"]
-        summary = result["summary"].select(
-            "*",
-            F.lit(seq).cast("bigint").alias("master_seq"),
-            F.lit(result["year"]).cast("int").alias("report_year"),
-            F.lit(result["week_no"]).cast("int").alias("week_no"),
-            F.lit(result["dt_from"]).alias("dt_from"),
-            F.lit(result["dt_to"]).alias("dt_to"),
-            F.lit("COMPLETE").alias("status_cd"),
-        )
-        wide_path = os.path.join(output, "ts_ins_week_sub")
-        sum_path = os.path.join(output, "ts_ins_week")
-        wide_prev = read_or_empty(spark, wide_path, wide.schema)
-        sum_prev = read_or_empty(spark, sum_path, summary.schema)
-        staged_overwrite(
-            spark, replace_by_key(wide_prev, wide, ["master_seq", "farm_no", "gubun"]), wide_path
-        )
-        staged_overwrite(
-            spark, replace_by_key(sum_prev, summary, ["master_seq", "farm_no"]), sum_path
-        )
-        wide.unpersist()
-        result["summary"].unpersist()
+        result = run_and_land_farm(spark, sf_dir, output, farm_no, ins_date, day_gb)
+    if result["status"] != "success":
+        return 200, {
+            "status": "error",
+            "farmNo": farm_no,
+            "dayGb": day_gb,
+            "error": result.get("error"),
+            "message": result.get("message"),
+        }
 
     return 200, {
         "status": "success",
         "farmNo": farm_no,
         "dayGb": day_gb,
-        "masterSeq": seq,
+        "masterSeq": result["master_seq"],
         "shareToken": result["share_token"],
         "year": result["year"],
         "weekNo": result["week_no"],
@@ -162,6 +108,8 @@ def handle_status(spark: SparkSession, output: str, farm_no: int, day_gb: str) -
     from the landed summary table (reference's TS_INS_WEEK lookup)."""
     import os
 
+    from inspig_etl_spark.pipelines.on_demand import SUMMARY_TABLE
+
     if day_gb not in ("WEEK", "MONTH", "QUARTER"):
         return 400, {"error": f"invalid day_gb: {day_gb}"}
     if day_gb != "WEEK":
@@ -171,7 +119,7 @@ def handle_status(spark: SparkSession, output: str, farm_no: int, day_gb: str) -
             "dayGb": day_gb,
             "message": f"no {day_gb} reports (only WEEK is implemented)",
         }
-    sum_path = os.path.join(output, "ts_ins_week")
+    sum_path = os.path.join(output, SUMMARY_TABLE)
     with _STATE_LOCK:  # never read through the staged swap's rename window
         if not os.path.exists(sum_path):
             return 200, {"exists": False, "farmNo": farm_no, "dayGb": day_gb,
@@ -229,7 +177,11 @@ def make_server(
             m = re.fullmatch(r"/api/etl/status/(\d+)(?:\?day_gb=(\w+))?", self.path)
             if m:
                 day_gb = (m.group(2) or "WEEK").upper()
-                code, body = handle_status(spark, output, int(m.group(1)), day_gb)
+                try:
+                    code, body = handle_status(spark, output, int(m.group(1)), day_gb)
+                except Exception as exc:  # noqa: BLE001 — same 500 contract as do_POST
+                    self._send(500, {"error": str(exc)})
+                    return
                 self._send(code, body)
                 return
             self._send(404, {"error": f"unknown path {self.path}"})

@@ -18,25 +18,35 @@ everything the endpoint computes:
 - the result contract: status / period / token dict mirroring
   ``RunFarmResponse``, with an error status for an unknown farm and for
   the not-yet-implemented MONTH/QUARTER report kinds
-  (``server.py:163-171``).
+  (``server.py:163-171``);
+- the report's storage contract, which the weekly batch, the run-farm
+  endpoint and ``runner --manual`` all land through.
 """
 
 from __future__ import annotations
 
 import hashlib
+import os
 from datetime import datetime, timedelta
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from inspig_etl_spark.pipelines.weekly import build_weekly_report
+from inspig_etl_spark.sources.sinks import land_slice
 
 SUPPORTED_DAY_GB = ("WEEK",)
+
+# The landed report tables (TS_INS_WEEK_SUB wide rows, TS_INS_WEEK summary)
+# and the slice a land replaces in each.
+WIDE_TABLE, WIDE_KEYS = "ts_ins_week_sub", ["master_seq", "farm_no", "gubun"]
+SUMMARY_TABLE, SUMMARY_KEYS = "ts_ins_week", ["master_seq", "farm_no"]
 
 
 def last_week_period(ins_date: str) -> dict:
     """Last week's Mon..Sun relative to ``ins_date`` (YYYYMMDD), plus the
-    ISO year/week of that Sunday (``orchestrator.py:1276-1289``).
+    ISO year/week of that Sunday (``orchestrator.py:1276-1289``) and its
+    ``master_seq``, ``year*100 + week_no``, which both report tables key on.
 
     A Sunday base date reports the PREVIOUS full week (7 days back), never
     the week ending today — the ``or 7`` in the reference.
@@ -52,6 +62,7 @@ def last_week_period(ins_date: str) -> dict:
         "dt_to": last_sunday.strftime("%Y%m%d"),
         "year": iso.year,
         "week_no": iso.week,
+        "master_seq": iso.year * 100 + iso.week,
     }
 
 
@@ -61,9 +72,32 @@ def share_token(farm_no: int, year: int, week_no: int, dt_to: str) -> str:
     return hashlib.sha256(f"{farm_no}-{year}-{week_no}-{dt_to}".encode()).hexdigest()
 
 
-def _dashed(yyyymmdd: str) -> str:
+def dashed(yyyymmdd: str) -> str:
     """20240115 -> 2024-01-15 (the pipeline takes ISO dates)."""
     return f"{yyyymmdd[:4]}-{yyyymmdd[4:6]}-{yyyymmdd[6:]}"
+
+
+def stamp_summary(summary: DataFrame, period: dict) -> DataFrame:
+    """Add the columns every landed summary row carries: the period,
+    ``status_cd='COMPLETE'`` and the farm's :func:`share_token`, computed
+    as a column so a fleet-wide batch stamps every farm in one plan."""
+    return summary.select(
+        "*",
+        F.lit(period["master_seq"]).cast("bigint").alias("master_seq"),
+        F.lit(period["year"]).cast("int").alias("report_year"),
+        F.lit(period["week_no"]).cast("int").alias("week_no"),
+        F.lit(period["dt_from"]).alias("dt_from"),
+        F.lit(period["dt_to"]).alias("dt_to"),
+        F.lit("COMPLETE").alias("status_cd"),
+        F.sha2(
+            F.concat_ws(
+                "-",
+                F.col("farm_no").cast("string"),
+                *(F.lit(str(period[k])) for k in ("year", "week_no", "dt_to")),
+            ),
+            256,
+        ).alias("share_token"),
+    )
 
 
 def run_single_farm(
@@ -72,24 +106,16 @@ def run_single_farm(
     farm_no: int,
     ins_date: str,
     day_gb: str = "WEEK",
-    master_seq: int | None = None,
     cache_results: bool = True,
 ) -> dict:
     """The run-farm endpoint's engine half: build last week's report for ONE
     farm and return the response contract.
 
-    ``master_seq`` defaults to the period's ``year*100 + week_no`` — the
-    same sequence the summary sink keys on — so the wide rows stamped by
-    :func:`to_wide_rows` land under the REAL week slice and a later week
-    can never replace an earlier one through the (master_seq, farm_no,
-    gubun) S12 key. Pass it explicitly only to mirror a pre-allocated
-    reference TS_INS_WEEK.MASTER_SEQ.
-
     Returns a dict with ``status`` ('success'/'error'), the period fields,
-    ``share_token``, and the two farm-scoped DataFrames (``wide_rows``,
-    ``summary``) for the caller to collect or land through the §S6-S10
-    sinks — both are the PERSISTED handles, so ``.unpersist()`` on them
-    actually frees the cache. Like the reference, an unsupported
+    ``share_token``, and the two farm-scoped DataFrames (``wide_rows``, and
+    ``summary`` already stamped by :func:`stamp_summary`) for the caller to
+    collect or land — both are the PERSISTED handles, so ``.unpersist()``
+    on them actually frees the cache. Like the reference, an unsupported
     ``day_gb`` and an unknown farm are ERROR results, not exceptions.
     """
     if day_gb not in SUPPORTED_DAY_GB:
@@ -101,33 +127,28 @@ def run_single_farm(
             "message": "only WEEK is supported",
         }
     period = last_week_period(ins_date)
-    if master_seq is None:
-        master_seq = period["year"] * 100 + period["week_no"]
     token = share_token(farm_no, period["year"], period["week_no"], period["dt_to"])
 
     wide, summary = build_weekly_report(
         spark,
         sf_dir,
-        master_seq=master_seq,
-        dt_from=_dashed(period["dt_from"]),
-        dt_to=_dashed(period["dt_to"]),
+        master_seq=period["master_seq"],
+        dt_from=dashed(period["dt_from"]),
+        dt_to=dashed(period["dt_to"]),
     )
     # persist(): the existence probe below and the caller's collect/land of
     # wide_rows + summary would otherwise each re-execute the farm-scoped
     # report plan (2-3 full runs per on-demand request — ADVICE r5). Both
     # frames are one farm's slice, so the cache is bounded; callers that
     # keep the session hot can `.unpersist()` them after landing. The
-    # share-token column is attached BEFORE the persist so the returned
-    # ``summary`` is the cached frame itself, not a derived child whose
-    # unpersist would be a no-op. ``cache_results=False`` skips the persist
-    # entirely for one-shot callers that execute the result exactly once
-    # (the oracle query, scale probes) — otherwise every invocation in a
-    # long-lived session accumulates two cached farm slices (ADVICE r9).
+    # summary is stamped BEFORE the persist so the returned ``summary`` is
+    # the cached frame itself, not a derived child whose unpersist would be
+    # a no-op. ``cache_results=False`` skips the persist entirely for
+    # one-shot callers that execute the result exactly once (the oracle
+    # query, scale probes) — otherwise every invocation in a long-lived
+    # session accumulates two cached farm slices (ADVICE r9).
     wide_farm = wide.filter(F.col("farm_no") == farm_no)
-    summary_farm = (
-        summary.filter(F.col("farm_no") == farm_no)
-        .withColumn("share_token", F.lit(token))
-    )
+    summary_farm = stamp_summary(summary.filter(F.col("farm_no") == farm_no), period)
     if cache_results:
         wide_farm = wide_farm.persist()
         summary_farm = summary_farm.persist()
@@ -150,9 +171,32 @@ def run_single_farm(
         "status": "success",
         "farm_no": farm_no,
         "day_gb": day_gb,
-        "master_seq": master_seq,
         "share_token": token,
         **period,
         "wide_rows": wide_farm,
         "summary": summary_farm,
     }
+
+
+def run_and_land_farm(
+    spark: SparkSession,
+    sf_dir: str,
+    output: str,
+    farm_no: int,
+    ins_date: str,
+    day_gb: str = "WEEK",
+) -> dict:
+    """:func:`run_single_farm`, then land its (week, farm) slice into the
+    report tables under ``output``. Returns the result without the
+    DataFrames. Callers serialize lands into one ``output``."""
+    result = run_single_farm(spark, sf_dir, farm_no=farm_no, ins_date=ins_date, day_gb=day_gb)
+    if result["status"] != "success":
+        return result
+    wide, summary = result.pop("wide_rows"), result.pop("summary")
+    try:
+        land_slice(spark, os.path.join(output, WIDE_TABLE), wide, WIDE_KEYS)
+        land_slice(spark, os.path.join(output, SUMMARY_TABLE), summary, SUMMARY_KEYS)
+    finally:
+        wide.unpersist()
+        summary.unpersist()
+    return result

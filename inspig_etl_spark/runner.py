@@ -11,22 +11,24 @@ exist in this package:
 - farm include panel (``--test --farm-list``) and ``--exclude`` →
   pushed-down ``isin`` predicates (the include/exclude rewrite of
   ``queries/domain_aggs.py``);
-- delete policy (``--test --init-week`` / ``--init-all``, production =
-  never delete) → the S12 idempotent-slice semantics via
-  :func:`sources.sinks.replace_by_key` over the prior output state;
-- atomic output commit → :func:`sources.sinks.staged_overwrite` (ST3);
+- landing → :func:`sources.sinks.land_slice` per report table, with the
+  delete policy (``--test --init-week`` / ``--init-all``, production =
+  never delete) as its ``keep`` predicate; the batch stamps the same
+  summary columns as run-farm, so its weeks answer ``GET /api/etl/status``;
 - master/job-log bookkeeping → :class:`streaming.incremental.RunManifest`
   (ST6), one JSON manifest per run;
-- ``--manual --farm-no`` → :func:`pipelines.on_demand.run_single_farm`;
+- ``--manual --farm-no`` → :func:`pipelines.on_demand.run_and_land_farm`,
+  landing into the same two tables as the api's run-farm endpoint;
 - ``--date-from/--date-to`` weekly batch stepping (+7 days, init-all on the
   first run only — exactly the reference's loop, ``run_etl.py:278-358``);
 - ``weather`` / ``productivity`` commands → the existing pipeline queries
   landed to their own output tables.
 
 The reference talks to Oracle; here outputs are parquet tables under
-``--output`` (``ts_ins_week_sub`` wide rows, ``ts_ins_week`` summaries),
-which is also what a cluster deployment would write. ``--dry-run`` resolves
-and prints the whole plan without creating a SparkSession.
+``--output`` (``ts_ins_week_sub`` wide rows, ``ts_ins_week`` summaries,
+``master_seq`` bigint in both), which is also what a cluster deployment
+would write. ``--dry-run`` resolves and prints the whole plan without
+creating a SparkSession.
 """
 
 from __future__ import annotations
@@ -56,8 +58,6 @@ def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
     p.add_argument("--exclude", default=None, help="farms to exclude, comma-separated")
     p.add_argument("--manual", action="store_true", help="single-farm mode")
     p.add_argument("--farm-no", type=int, help="farm for --manual")
-    p.add_argument("--dt-from", help="YYYYMMDD (accepted for parity; period is derived)")
-    p.add_argument("--dt-to", help="YYYYMMDD (accepted for parity; period is derived)")
     p.add_argument("--date-from", help="batch start YYYY-MM-DD (+7d steps)")
     p.add_argument("--date-to", help="batch end YYYY-MM-DD")
     p.add_argument("--sf-dir", default=None, help="input table directory")
@@ -177,11 +177,6 @@ def _backfill_window(args: argparse.Namespace, base: datetime) -> list[str]:
     return []
 
 
-def _master_seq(period: dict) -> int:
-    """One master row per (ISO year, week) — the TS_INS_MASTER key."""
-    return period["year"] * 100 + period["week_no"]
-
-
 def _scope_farms(df, include: list[int], exclude: list[int]):
     from pyspark.sql import functions as F
 
@@ -192,11 +187,6 @@ def _scope_farms(df, include: list[int], exclude: list[int]):
     return df
 
 
-def _dashed(yyyymmdd: str) -> str:
-    """20240115 -> 2024-01-15 (the pipeline takes ISO dates)."""
-    return f"{yyyymmdd[:4]}-{yyyymmdd[4:6]}-{yyyymmdd[6:]}"
-
-
 def run_weekly_batch(spark, plan: dict, init_all: bool, init_week: bool) -> list[dict]:
     """The weekly command: one report build per resolved date, landed with
     the reference's delete policy and a manifest per run."""
@@ -204,20 +194,24 @@ def run_weekly_batch(spark, plan: dict, init_all: bool, init_week: bool) -> list
 
     from pyspark.sql import functions as F
 
-    from inspig_etl_spark.pipelines.weekly import build_weekly_report
-    from inspig_etl_spark.sources.sinks import (
-        read_or_empty,
-        replace_by_key,
-        staged_overwrite,
+    from inspig_etl_spark.pipelines.on_demand import (
+        SUMMARY_KEYS,
+        SUMMARY_TABLE,
+        WIDE_KEYS,
+        WIDE_TABLE,
+        dashed,
+        stamp_summary,
     )
+    from inspig_etl_spark.pipelines.weekly import build_weekly_report
+    from inspig_etl_spark.sources.sinks import land_slice
     from inspig_etl_spark.streaming.incremental import RunManifest
 
     out = plan["output"]
-    wide_path = os.path.join(out, "ts_ins_week_sub")
-    sum_path = os.path.join(out, "ts_ins_week")
+    wide_path = os.path.join(out, WIDE_TABLE)
+    sum_path = os.path.join(out, SUMMARY_TABLE)
     results = []
     for i, period in enumerate(plan["periods"]):
-        seq = _master_seq(period)
+        seq = period["master_seq"]
         run_id = f"{period['ins_date']}-{seq}"
         manifest = RunManifest(run_id=run_id, path=os.path.join(out, f"manifest_{run_id}.json"))
         t0 = time.time()
@@ -226,49 +220,30 @@ def run_weekly_batch(spark, plan: dict, init_all: bool, init_week: bool) -> list
                 spark,
                 plan["sf_dir"],
                 master_seq=seq,
-                dt_from=_dashed(period["dt_from"]),
-                dt_to=_dashed(period["dt_to"]),
+                dt_from=dashed(period["dt_from"]),
+                dt_to=dashed(period["dt_to"]),
             )
             wide = _scope_farms(wide, plan["include_farms"], plan["exclude_farms"])
-            summary = _scope_farms(
-                summary, plan["include_farms"], plan["exclude_farms"]
-            ).withColumn("master_seq", F.lit(seq))
+            summary = stamp_summary(
+                _scope_farms(summary, plan["include_farms"], plan["exclude_farms"]), period
+            )
 
             # Delete policy (run_etl.py epilog): production never deletes;
             # --test --init-all starts empty (first date of a batch range);
-            # --test --init-week replaces this week's slice; otherwise the
-            # S12 semantics replace only the (master, farm, section) slices
+            # --test --init-week drops this week's slice; otherwise the S12
+            # semantics replace only the (master, farm, section) slices
             # being re-produced and keep everything else.
-            drop_all = plan["test_mode"] and (init_all and i == 0)
-            drop_week = plan["test_mode"] and (init_week or (init_all and i > 0))
-            wide_prev = (
-                None
-                if drop_all
-                else read_or_empty(spark, wide_path, wide.schema)
-            )
-            sum_prev = (
-                None
-                if drop_all
-                else read_or_empty(spark, sum_path, summary.schema)
-            )
-            if wide_prev is None:
-                wide_final, sum_final = wide, summary
-            elif drop_week:
-                wide_final = wide_prev.filter(F.col("master_seq") != seq).unionByName(wide)
-                sum_final = sum_prev.filter(F.col("master_seq") != seq).unionByName(summary)
-            else:
-                wide_final = replace_by_key(
-                    wide_prev, wide, ["master_seq", "farm_no", "gubun"]
-                )
-                sum_final = replace_by_key(sum_prev, summary, ["master_seq", "farm_no"])
+            keep = None
+            if plan["test_mode"] and init_all and i == 0:
+                keep = F.lit(False)
+            elif plan["test_mode"] and (init_week or init_all):
+                keep = F.col("master_seq") != seq
 
-            # ST3: both tables land via atomic staged swap — a rerun after a
-            # mid-write failure sees the previous complete state.
-            staged_overwrite(spark, wide_final, wide_path)
+            land_slice(spark, wide_path, wide, WIDE_KEYS, keep)
             n_wide = spark.read.parquet(wide_path).filter(F.col("master_seq") == seq).count()
             manifest.record_step("weekly_wide", "COMPLETE", n_wide, int((time.time() - t0) * 1000))
             t1 = time.time()
-            staged_overwrite(spark, sum_final, sum_path)
+            land_slice(spark, sum_path, summary, SUMMARY_KEYS, keep)
             n_sum = spark.read.parquet(sum_path).filter(F.col("master_seq") == seq).count()
             manifest.record_step("weekly_summary", "COMPLETE", n_sum, int((time.time() - t1) * 1000))
             manifest.finish("COMPLETE")
@@ -352,7 +327,7 @@ def main(argv: list[str] | None = None) -> int:
         for period in plan["periods"]:
             print(f"  period {period['ins_date']}: {period['dt_from']}..{period['dt_to']} "
                   f"(year {period['year']} week {period['week_no']}, "
-                  f"master_seq {_master_seq(period)})")
+                  f"master_seq {period['master_seq']})")
         return 0
 
     from inspig_etl_spark.session import get_spark
@@ -360,23 +335,16 @@ def main(argv: list[str] | None = None) -> int:
     spark = get_spark("inspig-etl-runner")
     try:
         if args.manual:
-            import os
+            from inspig_etl_spark.pipelines.on_demand import run_and_land_farm
 
-            from inspig_etl_spark.pipelines.on_demand import run_single_farm
-            from inspig_etl_spark.sources.sinks import staged_overwrite
-
-            result = run_single_farm(
-                spark, plan["sf_dir"], farm_no=args.farm_no,
-                ins_date=plan["dates"][0], day_gb=args.day_gb,
+            result = run_and_land_farm(
+                spark, plan["sf_dir"], plan["output"], args.farm_no,
+                plan["dates"][0], args.day_gb,
             )
             if result["status"] != "success":
                 print(f"ERROR: {result['error']}", file=sys.stderr)
                 return 1
-            staged_overwrite(
-                spark, result["wide_rows"],
-                os.path.join(plan["output"], f"farm_{args.farm_no}_wide"),
-            )
-            print({k: v for k, v in result.items() if k not in ("wide_rows", "summary")})
+            print(result)
             return 0
 
         if plan["command"] in ("weather", "productivity"):

@@ -359,6 +359,24 @@ def read_or_empty(spark: SparkSession, path: str, schema: str) -> DataFrame:
     return spark.createDataFrame([], schema)
 
 
+def land_slice(
+    spark: SparkSession,
+    path: str,
+    new: DataFrame,
+    keys: Sequence[str],
+    keep: Column | None = None,
+) -> None:
+    """Land ``new`` into the parquet table at ``path``: prior rows whose
+    ``keys`` tuple appears in ``new`` are replaced (S12), the rest stay, and
+    the result commits through the atomic staged swap (ST3). ``keep``
+    filters the prior state first (a delete policy); ``lit(False)`` starts
+    empty."""
+    prior = read_or_empty(spark, path, new.schema)
+    if keep is not None:
+        prior = prior.filter(keep)
+    staged_overwrite(spark, replace_by_key(prior, new, keys), path)
+
+
 def align_schemas(
     df: DataFrame, reference: DataFrame, allow_extra: bool = False
 ) -> DataFrame:

@@ -118,6 +118,47 @@ def test_two_weeks_coexist_in_landed_tables(api, spark, tmp_path):
     )
 
 
+def test_batch_landed_farms_answer_status(api, spark, tmp_path):
+    """Regression: the weekly batch and run-farm land one summary contract,
+    so a batch-landed farm answers status, and a run-farm land on top of
+    the batch keeps every farm only the batch landed."""
+    from inspig_etl_spark import runner
+    from inspig_etl_spark.pipelines.on_demand import share_token
+
+    out = str(tmp_path / "out")
+    plan = runner.resolve_plan(runner.parse_args(
+        ["weekly", "--test", "--base-date", "2024-01-25", "--farm-list", "3,4",
+         "--sf-dir", SF_SMOKE, "--output", out]
+    ))
+    results = runner.run_weekly_batch(spark, plan, init_all=False, init_week=False)
+    assert [r["status"] for r in results] == ["success"]
+
+    code, st = _get(f"{api}/api/etl/status/4")
+    assert code == 200 and st["exists"] is True, st
+    assert st["statusCd"] == "COMPLETE"
+    assert st["shareToken"] == share_token(4, 2024, 3, "20240121")
+
+    code, body = _post(f"{api}/api/etl/run-farm", {"farmNo": 3, "insDate": "20240125"})
+    assert code == 200 and body["status"] == "success", body
+    _, st3 = _get(f"{api}/api/etl/status/3")
+    assert st3["exists"] is True and st3["shareToken"] == body["shareToken"]
+    _, st4 = _get(f"{api}/api/etl/status/4")
+    assert st4["exists"] is True and st4["shareToken"] == st["shareToken"]
+    for table in ("ts_ins_week_sub", "ts_ins_week"):
+        assert dict(spark.read.parquet(f"{out}/{table}").dtypes)["master_seq"] == "bigint"
+
+
+def test_status_engine_error_is_a_500(api, spark, tmp_path):
+    """A summary table without the contract columns (as an older version
+    left it) fails the status read; the GET answers 500 with a JSON error
+    instead of dropping the connection."""
+    spark.createDataFrame([(3, 202403)], "farm_no bigint, master_seq int").write.parquet(
+        str(tmp_path / "out" / "ts_ins_week")
+    )
+    code, body = _get(f"{api}/api/etl/status/3")
+    assert code == 500 and "status_cd" in body["error"]
+
+
 def test_impossible_date_is_a_400_not_a_500(api):
     code, body = _post(f"{api}/api/etl/run-farm", {"farmNo": 3, "insDate": "20241399"})
     assert code == 400 and "insDate" in body["error"]

@@ -11,6 +11,8 @@ import os
 import subprocess
 import sys
 
+import pytest
+
 from inspig_etl_spark import runner
 from tests.conftest import SF_SMOKE
 
@@ -53,6 +55,9 @@ def test_error_paths_exit_nonzero(capsys):
             raise AssertionError("expected SystemExit")
         except SystemExit as e:
             assert e.code == 1
+    for flag in ("--dt-from", "--dt-to"):  # the period is always derived
+        with pytest.raises(SystemExit):
+            runner.parse_args([flag, "20240101"])
 
 
 def test_weekly_batch_end_to_end(spark, tmp_path):
@@ -103,6 +108,25 @@ def test_weekly_batch_end_to_end(spark, tmp_path):
         .select("master_seq").distinct().collect()
     }
     assert seqs == {202403, 202404}
+
+
+def test_manual_lands_into_report_tables(spark, tmp_path, monkeypatch):
+    """--manual lands one farm's report into ts_ins_week(_sub), where the
+    api's status lookup finds it, and writes no side table."""
+    from inspig_etl_spark.api import handle_status
+
+    monkeypatch.setattr("inspig_etl_spark.session.get_spark", lambda *a, **k: spark)
+    monkeypatch.setattr(spark, "stop", lambda: None)  # main stops its session
+    out = str(tmp_path / "out")
+    rc = runner.main(["--manual", "--farm-no", "3", "--base-date", "2024-01-25",
+                      "--sf-dir", SF_SMOKE, "--output", out])
+    assert rc == 0
+    assert sorted(os.listdir(out)) == ["ts_ins_week", "ts_ins_week_sub"]
+    wide = spark.read.parquet(os.path.join(out, "ts_ins_week_sub"))
+    slices = wide.select("master_seq", "farm_no").distinct().collect()
+    assert [tuple(r) for r in slices] == [(202403, 3)]
+    code, st = handle_status(spark, out, 3, "WEEK")
+    assert code == 200 and st["exists"] is True and st["weekNo"] == 3
 
 
 def test_cli_subprocess_end_to_end(tmp_path):

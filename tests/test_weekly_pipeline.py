@@ -75,7 +75,7 @@ class TestOnDemandSingleFarm:
         # Wednesday 2024-01-24 -> last week Mon 15th .. Sun 21st, ISO W3.
         p = last_week_period("20240124")
         assert (p["dt_from"], p["dt_to"]) == ("20240115", "20240121")
-        assert (p["year"], p["week_no"]) == (2024, 3)
+        assert (p["year"], p["week_no"], p["master_seq"]) == (2024, 3, 202403)
         # Sunday base reports the PREVIOUS full week, never today's.
         p = last_week_period("20240121")
         assert (p["dt_from"], p["dt_to"]) == ("20240108", "20240114")
